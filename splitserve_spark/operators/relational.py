@@ -20,6 +20,24 @@ from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
+def sort_bounded(df: DataFrame, *cols: str) -> DataFrame:
+    """Sort a result whose size is bounded by construction in ONE task:
+    ``coalesce(1).sortWithinPartitions(cols)``, ascending, nulls first
+    (the same order ``orderBy(cols)`` emits).
+
+    A global ``orderBy`` plans a range-partition exchange plus a
+    sampling job to pick its bounds; for a handful of rows both cost
+    far more than the sort.  ``coalesce(1)`` adds no exchange: the
+    producing stage (typically the final aggregate) runs as one task.
+    Use it only where the row count is bounded independently of the
+    data size — an aggregate over low-cardinality keys, e.g. TPC-H
+    Q1's ≤ 6 (returnflag, linestatus) groups.  NEVER use it on an
+    output that grows with the data: one task would then sort the
+    whole result.
+    """
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 @register(
     "q1_pricing_summary",
     oracle="""
@@ -53,37 +71,43 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: the shipdate filter is pushed to the parquet row-group
     level (min/max stats) and only 9 of 11 columns are read; the
     aggregation has 6 groups, so the partial-aggregate reduces ~all rows
-    map-side and the final shuffle moves O(partitions·6) rows.
+    map-side and the final shuffle moves O(partitions·6) rows.  That
+    shuffle is the plan's only exchange: the ≤ 6 output rows (one per
+    returnflag × linestatus pair, at any scale) sort in one task
+    (sort_bounded) instead of behind a range exchange and its sampling
+    job.
     """
     ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    return sort_bounded(
         t.lineitem
-        .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        .filter("l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            # Money sums go through LOSSLESS decimal casts (2dp price,
-            # 4dp price*(1-disc), 6dp *(1+tax)): exact and associative,
-            # so results are bit-identical at any partition count —
-            # raw double sums are partial-sum-order dependent (the ULP
-            # class the r11 twin sweep caught on q19).  Averages of
-            # money columns divide the exact decimal sum as a double.
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double").alias("sum_base_price"),
-            F.sum(disc_price.cast("decimal(18,4)"))
-            .cast("double").alias("sum_disc_price"),
-            F.sum((disc_price * (1 + F.col("l_tax"))).cast("decimal(18,6)"))
-            .cast("double").alias("sum_charge"),
-            F.avg("l_quantity").alias("avg_qty"),
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-             .cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            (F.sum(F.col("l_discount").cast("decimal(18,2)"))
-             .cast("double") / F.count(F.lit(1))).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+            # SQL text: one JVM-side parse per aggregate instead of a
+            # py4j round trip per Column call.  Money sums go through
+            # LOSSLESS decimal casts (2dp price, 4dp price*(1-disc),
+            # 6dp *(1+tax)): exact and associative, so results are
+            # bit-identical at any partition count — raw double sums
+            # are partial-sum-order dependent (the ULP class the r11
+            # twin sweep caught on q19).  Averages of money columns
+            # divide the exact decimal sum as a double.
+            F.expr("sum(l_quantity) AS sum_qty"),
+            F.expr("CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))"
+                   " AS DOUBLE) AS sum_base_price"),
+            F.expr("CAST(sum(CAST(l_extendedprice * (1 - l_discount)"
+                   " AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price"),
+            F.expr("CAST(sum(CAST(l_extendedprice * (1 - l_discount)"
+                   " * (1 + l_tax) AS DECIMAL(18,6))) AS DOUBLE)"
+                   " AS sum_charge"),
+            F.expr("avg(l_quantity) AS avg_qty"),
+            F.expr("CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))"
+                   " AS DOUBLE) / count(1) AS avg_price"),
+            F.expr("CAST(sum(CAST(l_discount AS DECIMAL(18,2)))"
+                   " AS DOUBLE) / count(1) AS avg_disc"),
+            F.expr("count(1) AS count_order"),
+        ),
+        "l_returnflag", "l_linestatus",
     )
 
 

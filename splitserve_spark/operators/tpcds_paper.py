@@ -6,11 +6,15 @@ their *plan shapes* onto the driver schema (no store/catalog/web
 channel tables here), because the shapes — not the retail column names
 — are what exercise the engine:
 
-  Q5  : per-channel sales⊎returns UNION ALL → ROLLUP report
-  Q16 : EXISTS (second site) + NOT EXISTS (return) + count(DISTINCT)
+  Q5  : per-channel sales⊎returns UNION ALL → ROLLUP report, sorted
+        in one task (the report is bounded by its grouping keys)
+  Q16 : EXISTS (second site) + NOT EXISTS (return) + count(DISTINCT),
+        run as ONE keyed aggregate over orders ⊎ lineitem on the order
+        key; count(1) replaces count(DISTINCT) exactly because
+        o_orderkey is the key of orders
   Q94 : same skeleton on a second "channel" slice with date-range scan
-  Q95 : both membership tests against a pre-aggregated multi-supplier
-        order view referenced twice (exchange reuse)
+  Q95 : both membership tests against a multi-supplier order view
+        referenced twice — they collapse into the same keyed aggregate
 
 Channel mapping: lineitem rows are "sales"; returnflag='R' rows double
 as the returns flow.  Site/warehouse mapping: l_suppkey (an order
@@ -24,6 +28,7 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
 from splitserve_spark.session import ensure_parity_conf
+from splitserve_spark.operators.relational import sort_bounded
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.tables import Tables
 
@@ -70,50 +75,50 @@ def qds5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q5 shape: two channel flows unioned, then a ROLLUP report
     (Expand operator doubles rows per grouping set — the I/O-heavy
     pattern the paper picked).  Union branches stay independent until
-    the single aggregation shuffle."""
+    the single aggregation shuffle, which is the plan's only exchange.
+    The report is bounded by its grouping keys at any scale — 3 order
+    statuses + 5 priority classes, 2 channel subtotals and the grand
+    total, at most 11 rows — so it sorts in one task (sort_bounded),
+    not behind a range exchange and its sampling job.  Every
+    expression is SQL text, parsed once in the JVM."""
     ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     flow1 = (
         t.lineitem
-        .filter(
-            (F.col("l_shipdate") >= _ts("1996-01-01"))
-            & (F.col("l_shipdate") < _ts("1996-07-01"))
-        )
-        .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.lit("order channel").alias("channel"),
-            F.concat(F.lit("status_"), F.col("o_orderstatus")).alias("id"),
-            rev.cast("decimal(18,4)").alias("sales"),
-            F.when(F.col("l_returnflag") == "R", rev)
-            .otherwise(0.0).cast("decimal(18,4)").alias("returns"),
+        .filter("l_shipdate >= TIMESTAMP '1996-01-01'"
+                " AND l_shipdate < TIMESTAMP '1996-07-01'")
+        .join(t.orders, F.expr("l_orderkey = o_orderkey"))
+        .selectExpr(
+            "'order channel' AS channel",
+            "concat('status_', o_orderstatus) AS id",
+            f"CAST({rev} AS DECIMAL(18,4)) AS sales",
+            f"CAST(CASE WHEN l_returnflag = 'R' THEN {rev} ELSE 0D END"
+            " AS DECIMAL(18,4)) AS returns",
         )
     )
     flow2 = (
         t.orders
-        .filter(
-            (F.col("o_orderdate") >= _ts("1996-01-01"))
-            & (F.col("o_orderdate") < _ts("1996-07-01"))
-        )
-        .select(
-            F.lit("priority channel").alias("channel"),
-            F.concat(F.lit("prio_"), F.substring("o_orderpriority", 1, 1)).alias("id"),
-            F.col("o_totalprice").cast("decimal(18,4)").alias("sales"),
-            F.lit(0).cast("decimal(18,4)").alias("returns"),
+        .filter("o_orderdate >= TIMESTAMP '1996-01-01'"
+                " AND o_orderdate < TIMESTAMP '1996-07-01'")
+        .selectExpr(
+            "'priority channel' AS channel",
+            "concat('prio_', substring(o_orderpriority, 1, 1)) AS id",
+            "CAST(o_totalprice AS DECIMAL(18,4)) AS sales",
+            "CAST(0 AS DECIMAL(18,4)) AS returns",
         )
     )
-    return (
+    return sort_bounded(
         flow1.unionAll(flow2)
         .rollup("channel", "id")
         .agg(
             # Exact decimal sums (lossless 4dp inputs): associative,
             # so the rollup's re-aggregation order cannot drift a ULP.
-            F.sum("sales").cast("double").alias("total_sales"),
-            F.sum("returns").cast("double").alias("total_returns"),
-            F.sum(F.col("sales") - F.col("returns"))
-            .cast("double").alias("profit"),
-        )
-        .orderBy(F.col("channel").asc_nulls_first(), F.col("id").asc_nulls_first())
+            F.expr("CAST(sum(sales) AS DOUBLE) AS total_sales"),
+            F.expr("CAST(sum(returns) AS DOUBLE) AS total_returns"),
+            F.expr("CAST(sum(sales - returns) AS DOUBLE) AS profit"),
+        ),
+        "channel", "id",
     )
 
 
@@ -138,42 +143,51 @@ _Q16_94_ORACLE = """
 """
 
 
-def _q16_94_impl(
-    spark: SparkSession, sf_dir: str, d0: str, d1: str, prios: tuple[str, ...],
-    negate_prio: bool,
+def _multi_site_orders(
+    spark: SparkSession, sf_dir: str, order_pred: str, returned: bool,
 ) -> DataFrame:
+    """Count and price-sum of the orders matching ``order_pred`` that
+    ship from ≥ 2 sites (suppliers) and have (``returned``) or lack a
+    returned line — the membership skeleton of Q16, Q94 and Q95.
+
+    ONE keyed aggregate over ``orders ⊎ lineitem`` on the order key
+    answers every test, so the plan has one data shuffle plus the
+    global aggregate's single-partition exchange, and one lineitem scan:
+      * order present   — max of a flag set only on the orders branch
+        (the filtered orders side of the oracle's join);
+      * ≥ 2 sites       — min(suppkey) ≠ max(suppkey): the EXISTS
+        correlates only on the order key, so "another line with a
+        different supplier" is a per-order predicate, and it implies
+        the order has a line (the oracle's l1 join);
+      * returned line   — max of the returnflag = 'R' flag.
+    ``count(1)`` and the price sum over the surviving keys are exact
+    because ``o_orderkey`` is the key of orders: each order contributes
+    one row and one o_totalprice, the same as the oracle's
+    count(DISTINCT o_orderkey) and its sum over DISTINCT (key, price)
+    rows (tests/test_environment_contract.py pins the uniqueness).
+    """
     t = Tables(spark, sf_dir)
-    prio = F.col("o_orderpriority").isin(*prios)
-    orders = t.orders.filter(
-        (F.col("o_orderdate") >= _ts(d0))
-        & (F.col("o_orderdate") < _ts(d1))
-        & (~prio if negate_prio else prio)
+    orders = t.orders.filter(order_pred).selectExpr(
+        "o_orderkey AS okey", "1 AS is_order", "o_totalprice AS price",
+        "CAST(NULL AS BIGINT) AS suppkey", "0 AS returned",
     )
-    li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
-    # Both membership tests fold into ONE per-order aggregate over ONE
-    # lineitem pass: "≥2 distinct suppliers" ⟺ min(suppkey)≠max(suppkey)
-    # (single-shuffle with map-side partial min/max, where the
-    # countDistinct form needs a two-level (orderkey, suppkey) →
-    # orderkey aggregate = two exchanges), and "has a returned line" is
-    # a max() flag in the same aggregate (was a second lineitem scan +
-    # distinct + anti join).  The EXISTS correlates only on o_orderkey,
-    # so the per-line quantifier reduces to the per-order predicate.
-    qualifying = (
-        li.groupBy("l_orderkey")
-        .agg(
-            (F.min("l_suppkey") != F.max("l_suppkey")).alias("multi"),
-            F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r"),
-        )
-        .filter(F.col("multi") & (F.col("has_r") == 0))
-        .select("l_orderkey")
+    lines = t.lineitem.selectExpr(
+        "l_orderkey AS okey", "0 AS is_order", "CAST(NULL AS DOUBLE) AS price",
+        "l_suppkey AS suppkey", "CAST(l_returnflag = 'R' AS INT) AS returned",
     )
     return (
-        orders
-        .join(qualifying, F.col("o_orderkey") == qualifying["l_orderkey"], "left_semi")
+        orders.unionAll(lines)
+        .groupBy("okey")
         .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("total_price"),
+            F.expr("max(is_order) AS has_order"),
+            F.expr("max(price) AS price"),
+            F.expr("min(suppkey) <> max(suppkey) AS multi_site"),
+            F.expr("max(returned) AS has_return"),
+        )
+        .filter(f"has_order = 1 AND multi_site AND has_return = {int(returned)}")
+        .selectExpr(
+            "count(1) AS order_count",
+            "CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total_price",
         )
     )
 
@@ -188,16 +202,21 @@ def _q16_94_impl(
 )
 def qds16_multi_site_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q16 shape: orders shipped from ≥2 sites (EXISTS another
-    supplier's line) with no returns (NOT EXISTS), count-distinct +
-    sum.  Both quantifiers correlate only on o_orderkey, so they fold
-    into one per-order lineitem aggregate (see _q16_94_impl) followed
-    by a single semi join. (Oracle's l1 join has duplicate orders per
-    line; DISTINCT before the final aggregate mirrors Q16's
-    count(DISTINCT).)"""
+    supplier's line) with no returns (NOT EXISTS), count + sum.  Both
+    quantifiers correlate only on o_orderkey, so they and the order
+    filter fold into one keyed aggregate over orders ⊎ lineitem (see
+    _multi_site_orders).  The oracle's l1 join repeats an order once
+    per line, hence its count(DISTINCT) over DISTINCT (key, price)
+    rows; the keyed aggregate already yields one row per order, and
+    o_orderkey is unique in orders, so count(1) and the plain price sum
+    give the same numbers."""
     ensure_parity_conf(spark)
-    return _q16_94_impl(
-        spark, sf_dir, "1996-01-01", "1996-04-01",
-        ("1-URGENT", "2-HIGH"), negate_prio=False,
+    return _multi_site_orders(
+        spark, sf_dir,
+        "o_orderdate >= TIMESTAMP '1996-01-01'"
+        " AND o_orderdate < TIMESTAMP '1996-04-01'"
+        " AND o_orderpriority IN ('1-URGENT', '2-HIGH')",
+        returned=False,
     )
 
 
@@ -212,10 +231,16 @@ def qds16_multi_site_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qds94_web_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q94 shape: identical membership skeleton to Q16 on the
     second "channel" slice (different date window + priority class) —
-    the paper runs both to stress the same I/O pattern twice."""
+    the paper runs both to stress the same I/O pattern twice.  Same
+    single keyed aggregate as Q16 (_multi_site_orders), exact for the
+    same reason: o_orderkey is the key of orders."""
     ensure_parity_conf(spark)
-    return _q16_94_impl(
-        spark, sf_dir, "1997-01-01", "1997-03-01", ("5-LOW",), negate_prio=True,
+    return _multi_site_orders(
+        spark, sf_dir,
+        "o_orderdate >= TIMESTAMP '1997-01-01'"
+        " AND o_orderdate < TIMESTAMP '1997-03-01'"
+        " AND o_orderpriority NOT IN ('5-LOW')",
+        returned=False,
     )
 
 
@@ -248,39 +273,18 @@ def qds95_both_sites_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join view) referenced by BOTH membership tests.  Unlike Q94,
     the return test requires the returning line itself to be in a
     multi-site order — but that line's order is then multi-site by
-    definition, so the two tests collapse to one per-order aggregate
-    (see the inline note)."""
+    definition, so "IN ws_wh AND IN returned_multi" ⟺ "≥ 2 distinct
+    suppliers AND has a returned line": the same single keyed
+    aggregate as Q16 (_multi_site_orders) with the return flag
+    required instead of excluded.  count(1) matches the oracle's
+    count(DISTINCT o_orderkey) because o_orderkey is the key of
+    orders."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
-    # The two membership tests collapse: returned_multi ⊆ ws_wh (its
-    # lines are semi-joined against ws_wh), so "IN ws_wh AND IN
-    # returned_multi" ⟺ "≥2 distinct suppliers AND has a returned
-    # line" — one per-order aggregate over one lineitem pass, with
-    # min≠max replacing the two-exchange countDistinct form and the
-    # return test a max() flag in the same aggregate (was: self-join-
-    # shaped CTE + a second scan + semi join + distinct).
-    qualifying = (
-        li.groupBy("l_orderkey")
-        .agg(
-            (F.min("l_suppkey") != F.max("l_suppkey")).alias("multi"),
-            F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r"),
-        )
-        .filter(F.col("multi") & (F.col("has_r") == 1))
-        .select("l_orderkey")
-    )
-    return (
-        t.orders
-        .filter(
-            (F.col("o_orderdate") >= _ts("1996-06-01"))
-            & (F.col("o_orderdate") < _ts("1996-09-01"))
-        )
-        .join(qualifying, F.col("o_orderkey") == qualifying["l_orderkey"], "left_semi")
-        .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("total_price"),
-        )
+    return _multi_site_orders(
+        spark, sf_dir,
+        "o_orderdate >= TIMESTAMP '1996-06-01'"
+        " AND o_orderdate < TIMESTAMP '1996-09-01'",
+        returned=True,
     )
 
 

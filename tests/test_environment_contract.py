@@ -14,8 +14,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from splitserve_spark.tables import Tables, normalize_event_ts
-from tests.oracle_utils import SF_DIR
+from splitserve_spark.tables import DEFAULT_SF_DIR, Tables, normalize_event_ts
+from tests.oracle_utils import SF_DIR, SF_DIR_ORACLE
 
 
 def test_events_ts_normalizes_to_micros_timestamp(spark):
@@ -97,3 +97,15 @@ def test_nanos_as_long_flag_is_irrelevant(spark):
         pytest.skip("conf not settable in this deployment")
     t = Tables(spark, SF_DIR)
     assert dict(t.events.dtypes)["ts"] == "timestamp"
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE, DEFAULT_SF_DIR])
+def test_orders_key_is_unique(spark, sf_dir):
+    """o_orderkey is the key of orders (non-null, distinct) at every
+    test SF.  Q16/Q94/Q95 count one row per surviving order key with
+    count(1) and sum one o_totalprice per key, which equals the
+    oracles' count(DISTINCT)/DISTINCT forms only under this key."""
+    row = Tables(spark, sf_dir).orders.selectExpr(
+        "count(1) AS n", "count(DISTINCT o_orderkey) AS keys"
+    ).first()
+    assert row["n"] > 0 and row["keys"] == row["n"], (sf_dir, row)
