@@ -102,12 +102,12 @@ def test_q1_two_shuffles_max(spark):
 
 
 #: Pre-AQE shuffle budgets of the paper's TPC queries on the tpc_sql
-#: bench.  Each exchange is a stage, and on these short plans every
-#: stage costs more in submission than in task time.  Q5 is its rollup
-#: exchange plus at most one join exchange; Q16/Q94/Q95 are one keyed
-#: aggregate over orders ⊎ lineitem plus the global count's exchange.
+#: bench (Q1's is test_q1_two_shuffles_max).  Each exchange is a stage,
+#: and on these short plans every stage costs more in submission than
+#: in task time.  Q5 is its rollup exchange plus at most one join
+#: exchange; Q16/Q94/Q95 are one keyed aggregate over orders ⊎ lineitem
+#: plus the global count's exchange.
 PAPER_TPC_EXCHANGE_BUDGET = {
-    "q1_pricing_summary": 1,
     "qds5_channel_rollup": 2,
     "qds16_multi_site_no_returns": 2,
     "qds94_web_no_returns": 2,
